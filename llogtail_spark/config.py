@@ -38,10 +38,6 @@ class PipelineConf:
     enrich_defaults: dict = field(
         default_factory=lambda: {"facility": "unknown", "team": "unassigned", "min_level": 0}
     )
-    # retained for config compatibility; the pipeline now always uses
-    # the one-pass exploded staged write (see pipeline.py docstring) —
-    # profiling showed the persist variant regressed with cores.
-    scan_strategy: str = "one_pass"
     committed_at: str = "1970-01-01T00:00:00Z"  # injected, deterministic tests
     validate_on_start: bool = False
     # ship_mode:
@@ -52,11 +48,6 @@ class PipelineConf:
     #               requires the iceberg-spark-runtime jar). The
     #               cluster-scale answer to 10^6 serial driver renames.
     ship_mode: str = "rename"
-    # rename-mode parallelism: >1 ships a sink's staged partition dirs
-    # with a thread pool (renames are independent metadata ops); the
-    # manifest commits stay ordered after ALL of the sink's renames
-    # land, preserving push-then-checkpoint
-    ship_workers: int = 1
 
     @property
     def manifest_dir(self) -> str:

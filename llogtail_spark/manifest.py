@@ -58,11 +58,13 @@ def _entry_path(manifest_dir: str, sink: str, part: str) -> str:
     return os.path.join(manifest_dir, f"{sink}={part}.json")
 
 
-def commit(manifest_dir: str, entry: ManifestEntry) -> str:
-    """Atomically persist one manifest entry (temp + rename)."""
-    os.makedirs(manifest_dir, exist_ok=True)
-    final = _entry_path(manifest_dir, entry.sink, entry.part)
-    fd, tmp = tempfile.mkstemp(dir=manifest_dir, suffix=".tmp")
+def write_json_atomic(path: str, obj) -> None:
+    """Write `obj` as JSON to `path` atomically (temp + rename); the
+    temp file never outlives a failed write. Shared by the log
+    manifest and the corpus stage manifests."""
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
     try:
         # temp+rename gives process-crash atomicity; no fsync — the
         # reference's makeCheckpoint is a plain truncate-write with
@@ -70,11 +72,17 @@ def commit(manifest_dir: str, entry: ManifestEntry) -> str:
         # already the stronger discipline, and 192 fsyncs/run were
         # measurable serial driver time.
         with os.fdopen(fd, "w") as f:
-            json.dump(asdict(entry), f)
-        os.rename(tmp, final)
+            json.dump(obj, f)
+        os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+def commit(manifest_dir: str, entry: ManifestEntry) -> str:
+    """Atomically persist one manifest entry (temp + rename)."""
+    final = _entry_path(manifest_dir, entry.sink, entry.part)
+    write_json_atomic(final, asdict(entry))
     return final
 
 

@@ -1,25 +1,36 @@
-"""Pipeline orchestration: scan -> parse -> enrich -> route -> ship
--> checkpoint, with skip-committed resume.
+"""Pipeline orchestration: plan -> scan -> parse -> enrich -> route
+-> ship -> checkpoint, with skip-committed resume.
 
 This is the LogCollector.handleEvent/listenEvent analog
-(log_collector.go:134-221) with the event loop replaced by one
-declarative DAG per run: the Iceberg/parquet snapshot IS the set of
-"modify events"; partitions above the committed manifest are the
-un-consumed bytes; there is nothing to poll.
+(log_collector.go:134-221). The reference has ONE path from event to
+sink push to checkpoint; so does this module. Two parts:
+
+- planning (batch only, `run_pipeline`): validate the manifest, list
+  the input partitions, prune the committed ones. The parquet
+  snapshot IS the set of "modify events"; partitions above the
+  committed manifest are the un-consumed bytes; there is nothing to
+  poll.
+- `ship_and_commit`: given a scan frame, the pending {sink: [parts]}
+  and the input identities, run the staged write, reconcile it
+  against a readback of the staged files, rename into the sinks and
+  commit the manifest. The batch run, every streaming micro-batch
+  and the streaming rescan (streaming/tail.py) all ship through it,
+  so every log-path manifest entry is written here.
 
 Consistency contract preserved (SURVEY.md §3.5):
 - sink write strictly before manifest commit (push-then-checkpoint,
   log_collector.go:208-215);
-- idempotent dynamic-partition overwrite upgrades the reference's
-  at-least-once to effectively-once across kill/resume;
+- idempotent per-partition replace upgrades the reference's
+  at-least-once to effectively-once across kill/resume; a partition
+  with zero routed rows clears its stale sink data;
 - per-row atomicity: a routed row carries its full token array —
   never a partial record (line-framing analog, buffer.go:103-104).
 
 Scale shape (profiled on this host, see BENCH/BASELINE.md):
 - resume pruning happens at the FILE LIST level (driver-side set
   difference, metadata-only) so committed data is never scanned;
-- exactly THREE jobs per run:
-  1. input identity — column-pruned JVM-only scan (no Python);
+- exactly THREE steps per run, two of them Spark jobs:
+  1. input identity — parquet footer reads (no Spark job);
   2. the heavy pass — scan -> Arrow parse UDF -> broadcast enrich ->
      route-explode -> write partitionBy(sink, part) to staging; one
      stage, no shuffle, no persist (a persist+K-writes variant
@@ -27,48 +38,38 @@ Scale shape (profiled on this host, see BENCH/BASELINE.md):
   3. readback stats — column-pruned scan of the staged files
      (n_tok, row_hash + partition cols), megabytes not data;
 - ship = metadata-only directory rename staging/sink=X/part=Y ->
-  sink_path/part=Y, then the manifest commit (push-then-checkpoint).
+  sink_path/part=Y from a SHIP_WORKERS-wide thread pool, then the
+  manifest commit (push-then-checkpoint).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import sys
-import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from llogtail_spark import manifest as mf
 from llogtail_spark.config import PipelineConf
 from llogtail_spark.operators.enrich import enrich_stage
 from llogtail_spark.operators.parse import parse_stage
-from llogtail_spark.operators.route import explode_routed
+from llogtail_spark.operators.route import SAFE_NAME, explode_routed
 from llogtail_spark.sources import reader
 
 # failpoint(stage, sink, part) — tests inject crashes between the sink
 # write and the manifest commit to prove effectively-once resume.
 Failpoint = Callable[[str, str, str], None]
 
-# LLOGTAIL_STAGE_TIMING=1 prints per-stage wall seconds to stderr —
-# used to attribute the run's fixed (row-independent) cost when tuning
-# the scaling floor; free when unset.
-_TIMING = os.environ.get("LLOGTAIL_STAGE_TIMING") == "1"
-
-
-class _stage_timer:
-    def __init__(self) -> None:
-        self.t = time.time()
-
-    def lap(self, label: str) -> None:
-        if _TIMING:
-            now = time.time()
-            print(f"[stage-timing] {label}: {now - self.t:.3f}s",
-                  file=sys.stderr, flush=True)
-            self.t = now
+# renames of distinct partition dirs are independent metadata ops — at
+# 10^6 input partitions a serial driver loop is the bottleneck
+# (VERDICT r02); commits follow only after every rename of a sink has
+# landed, so a crash mid-ship commits nothing and the re-run replaces
+# the same dirs idempotently
+SHIP_WORKERS = 8
 
 
 @dataclass
@@ -78,9 +79,8 @@ class RunResult:
     metrics: DataFrame | None  # per-sink aggregates (None if no-op run)
 
 
-def _prepare(spark: SparkSession, conf: PipelineConf, files: list[str]) -> DataFrame:
-    df = reader.read_files(spark, files)
-    df = reader.with_partition_id(df)
+def _prepare(spark: SparkSession, conf: PipelineConf, scan: DataFrame) -> DataFrame:
+    df = reader.with_partition_id(scan)
     df = parse_stage(df, conf.grok)
     if conf.lookup_path:
         lookup = spark.read.parquet(conf.lookup_path)
@@ -111,25 +111,7 @@ def run_pipeline(
     conf: PipelineConf,
     failpoint: Failpoint | None = None,
 ) -> RunResult:
-    # the staging/ship/manifest machinery below walks and renames the
-    # workdir with local filesystem calls; a remote workdir URI would
-    # silently find no staged files and commit zero-count manifests
-    # over real data. Fail loudly instead (the cluster-scale path is
-    # Iceberg data-file commits, as documented in the module header).
-    # Resolve ONCE and use the resolved path throughout: a 'file:' URI
-    # passes the guard, but if staging were built on the raw string,
-    # Spark would write under the resolved /path while os.scandir on
-    # the literal 'file:/...' string found nothing — staged_any=False
-    # and the ship loop would rmtree real sink data, the exact failure
-    # this guard exists to prevent (ADVICE r02).
-    tm = _stage_timer()
-    workdir = reader.local_path(conf.workdir)
-    if workdir is None:
-        raise NotImplementedError(
-            f"workdir must be a local path (got {conf.workdir!r}); on a "
-            "cluster, stage to an Iceberg table commit instead"
-        )
-
+    """Batch run: plan the uncommitted partitions, then ship them."""
     if conf.validate_on_start:
         validate_manifest(spark, conf)
 
@@ -146,15 +128,62 @@ def run_pipeline(
         return RunResult(processed={r.name: [] for r in conf.sinks},
                          skipped=skipped, metrics=None)
 
-    from llogtail_spark.operators.route import SAFE_NAME
+    files = {p: parts[p] for p in union_parts}
+    # input-partition identity from parquet FOOTER metadata only
+    # (driver-side parallel footer reads, no scan, no Spark job) —
+    # the validateCpt analog (utils.go:128-133). At cluster scale
+    # these stats come from the Iceberg manifest.
+    in_ids = reader.files_identity(files)
+    scan = reader.read_files(spark, list(files.values()))
+    processed = ship_and_commit(spark, conf, scan, pending, in_ids, failpoint)
+    metrics = _metrics_from_manifest(spark, conf, live_parts=set(parts))
+    return RunResult(processed=processed, skipped=skipped, metrics=metrics)
 
+
+def _staging_dir(conf: PipelineConf) -> str:
+    # the staging/ship/manifest machinery walks and renames the
+    # workdir with local filesystem calls; a remote workdir URI would
+    # silently find no staged files and commit zero-count manifests
+    # over real data. Fail loudly instead (the cluster-scale path is
+    # Iceberg data-file commits, as documented in the module header).
+    # Resolve ONCE and use the resolved path throughout: a 'file:' URI
+    # passes the guard, but if staging were built on the raw string,
+    # Spark would write under the resolved /path while os.scandir on
+    # the literal 'file:/...' string found nothing — staged_any=False
+    # and the ship loop would rmtree real sink data, the exact failure
+    # this guard exists to prevent (ADVICE r02).
+    workdir = reader.local_path(conf.workdir)
+    if workdir is None:
+        raise NotImplementedError(
+            f"workdir must be a local path (got {conf.workdir!r}); on a "
+            "cluster, stage to an Iceberg table commit instead"
+        )
+    return os.path.join(workdir, "staging")
+
+
+def ship_and_commit(
+    spark: SparkSession,
+    conf: PipelineConf,
+    scan: DataFrame,
+    pending: dict[str, list[str]],
+    in_ids: dict[str, tuple[int, int]],
+    failpoint: Failpoint | None = None,
+) -> dict[str, list[str]]:
+    """Route `scan` (the raw input rows of exactly the pending parts'
+    files) into every sink's pending partitions and commit their
+    manifest entries. `in_ids` holds the (row_count, checksum) input
+    identity of every pending part. Returns {sink: committed parts}.
+
+    A pending part is REPLACED in its sink: its staged rows, or
+    nothing when no row of it matches the sink's predicate."""
+    staging = _staging_dir(conf)
+    union_parts = sorted({p for ps in pending.values() for p in ps})
     bad = [p for p in union_parts if not SAFE_NAME.match(p)]
     if bad:
         raise ValueError(
             f"partition ids {bad[:3]} contain characters Spark would "
             "escape in partition paths; rename the input files"
         )
-
     fmts = {(r.format, tuple(sorted(r.options.items()))) for r in conf.sinks}
     if len(fmts) != 1:
         raise NotImplementedError(
@@ -163,18 +192,6 @@ def run_pipeline(
         )
     fmt, fmt_opts = conf.sinks[0].format, conf.sinks[0].options
 
-    tm.lap("plan:list+resume-prune")
-    files = [parts[p] for p in union_parts]
-    df = _prepare(spark, conf, files)
-    tm.lap("plan:prepare-dag")
-
-    # --- input-partition identity from parquet FOOTER metadata only
-    # (driver-side parallel footer reads, no scan, no Spark job) —
-    # the validateCpt analog (utils.go:128-133). At cluster scale
-    # these stats come from the Iceberg manifest.
-    in_stats = reader.files_identity({p: parts[p] for p in union_parts})
-    tm.lap("job1:input-identity-footers")
-
     # --- job 2 (the ONE heavy pass): parse -> enrich -> route-explode
     # -> staged write partitioned by (sink, part). parse runs exactly
     # once, inside the write stage (scan -> Arrow UDF -> broadcast join
@@ -182,7 +199,7 @@ def run_pipeline(
     # Profiled alternative (persist + K filtered writes) REGRESSED with
     # cores (cache pressure: stats+persist 14s@local[8] -> 26s@local[32]);
     # this shape scales with the writes (~3.4x at 4x cores).
-    routed = explode_routed(df, conf.sinks).withColumn(
+    routed = explode_routed(_prepare(spark, conf, scan), conf.sinks).withColumn(
         # per-row content hash shipped WITH the data: the readback
         # stats (job 3) checksum what actually landed in the files
         "row_hash", F.xxhash64("doc_id", "tok_hash")
@@ -193,7 +210,6 @@ def run_pipeline(
             pair_pred = pair_pred | (
                 (F.col("sink") == rule.name) & F.col("part").isin(pending[rule.name])
             )
-    staging = os.path.join(workdir, "staging")
     shutil.rmtree(staging, ignore_errors=True)
     # observe(): global (rows, tok_total, xor-checksum) accumulated BY
     # the write stage itself — zero extra scan (Spark accumulator
@@ -203,8 +219,6 @@ def run_pipeline(
     # task file, a vanished part dir) and the run must fail rather
     # than commit wrong lineage. xor is associative+commutative, so
     # the global xor equals the xor of job 3's per-(sink, part) xors.
-    from pyspark.sql import Observation
-
     obs = Observation("staged")
     routed.filter(pair_pred).observe(
         obs,
@@ -214,110 +228,35 @@ def run_pipeline(
     ).write.format(fmt).mode("overwrite").partitionBy(
         "sink", "part"
     ).options(**fmt_opts).save(staging)
-    tm.lap("job2:heavy-pass-staged-write")
     observed = obs.get
     if failpoint:
         # tests corrupt staged files here to prove the
         # observe-vs-readback reconciliation refuses to commit
         failpoint("after_stage", "", "")
-
-    # --- job 3 (tiny): per-(sink, part) lineage stats read back from
-    # the staged files themselves — column-pruned to (n_tok, row_hash)
-    # + partition columns, so it scans megabytes, not the data.
-    # Zero rows staged is detected explicitly (no sink= dirs), NOT by
-    # swallowing exceptions — a transient readback failure must fail
-    # the run rather than commit row_count=0 manifests over real data.
-    staged_any = any(
-        e.name.startswith("sink=") for e in os.scandir(staging)
-    ) if os.path.isdir(staging) else False
-    if staged_any:
-        # belt-and-braces with the session-level inference-off config:
-        # sink/part are OUR string keys; a numeric basename read back
-        # as int would miss the stats lookup and commit zero counts.
-        stats = {
-            (str(r["sink"]), str(r["part"])): r
-            for r in spark.read.format(fmt)
-            .load(staging)
-            .groupBy(
-                F.col("sink").cast("string").alias("sink"),
-                F.col("part").cast("string").alias("part"),
-            )
-            .agg(
-                F.count("*").alias("row_count"),
-                # mirror the observe() side's coalesce: an all-NULL
-                # n_tok group must reconcile as 0, not raise TypeError
-                # on int(None) below (ADVICE r03)
-                F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tok_total"),
-                F.coalesce(F.bit_xor("row_hash"), F.lit(0)).alias("checksum"),
-            )
-            .collect()
-        }
-        # write-stage vs file-readback reconciliation (observe() docs
-        # above): totals must match exactly or lineage would lie
-        rb_rows = sum(int(r["row_count"]) for r in stats.values())
-        rb_tok = sum(int(r["tok_total"]) for r in stats.values())
-        rb_x = 0
-        for r in stats.values():
-            rb_x ^= int(r["checksum"])
-        if (rb_rows, rb_tok, rb_x) != (
-            int(observed["rows"]),
-            int(observed["tok_total"]),
-            int(observed["checksum"]),
-        ):
-            raise RuntimeError(
-                "staged readback disagrees with the write-stage "
-                f"observation: readback (rows={rb_rows}, tok={rb_tok}, "
-                f"xor={rb_x}) vs observed (rows={observed['rows']}, "
-                f"tok={observed['tok_total']}, xor={observed['checksum']})"
-                " — staged files are incomplete or corrupted; refusing"
-                " to commit lineage"
-            )
-    else:
-        stats = {}
-        if int(observed["rows"]) != 0:
-            raise RuntimeError(
-                f"write stage observed {observed['rows']} rows but no "
-                "sink= directories were staged — staging output is "
-                "missing; refusing to commit lineage"
-            )
-    tm.lap("job3:readback-stats")
+    stats = _readback_stats(spark, staging, fmt, observed)
 
     # --- ship + checkpoint, per sink in rule order: move the staged
-    # partitions to the sink (rename, parallel rename, or one Iceberg
-    # commit — conf.ship_mode/ship_workers), THEN commit manifest
-    # rows — push-then-checkpoint ordering (log_collector.go:208-215).
-    # Idempotent: a re-run replaces the same partitions exactly
-    # (effectively-once).
+    # partitions to the sink (parallel rename, or one Iceberg commit —
+    # conf.ship_mode), THEN commit manifest rows — push-then-checkpoint
+    # ordering (log_collector.go:208-215). Idempotent: a re-run
+    # replaces the same partitions exactly (effectively-once).
     processed: dict[str, list[str]] = {}
     for rule in conf.sinks:
         todo = pending[rule.name]
         if not todo:
             processed[rule.name] = []
             continue
-        pre_shipped = False
         if conf.ship_mode == "iceberg":
             _ship_sink_iceberg(spark, staging, rule, todo)
-            pre_shipped = True
-        elif conf.ship_workers > 1:
-            # renames of distinct partition dirs are independent
-            # metadata ops — at 10^6 input partitions the serial
-            # driver loop is the bottleneck (VERDICT r02); commits
-            # follow only after every rename of this sink landed, so
-            # a crash mid-ship commits nothing and the re-run replaces
-            # the same dirs idempotently
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(conf.ship_workers) as ex:
+        else:
+            with ThreadPoolExecutor(SHIP_WORKERS) as ex:
                 list(ex.map(lambda p: _ship_part(staging, rule, p), todo))
-            pre_shipped = True
         committed = []
         for p in todo:
-            if not pre_shipped:
-                _ship_part(staging, rule, p)
             if failpoint:
                 failpoint("before_commit", rule.name, p)
             s = stats.get((rule.name, p))
-            ins = in_stats.get(p)
+            in_rows, in_ck = in_ids[p]
             mf.commit(
                 conf.manifest_dir,
                 mf.ManifestEntry(
@@ -326,10 +265,10 @@ def run_pipeline(
                     row_count=int(s["row_count"]) if s else 0,
                     tok_total=int(s["tok_total"]) if s else 0,
                     checksum=int(s["checksum"]) if s else 0,
-                    watermark_offset=int(ins[0]) if ins else 0,
+                    watermark_offset=int(in_rows),
                     committed_at=conf.committed_at,
-                    in_row_count=int(ins[0]) if ins else 0,
-                    in_checksum=int(ins[1]) if ins else 0,
+                    in_row_count=int(in_rows),
+                    in_checksum=int(in_ck),
                 ),
             )
             committed.append(p)
@@ -337,18 +276,78 @@ def run_pipeline(
                 failpoint("after_commit", rule.name, p)
         processed[rule.name] = committed
     shutil.rmtree(staging, ignore_errors=True)
-    tm.lap("ship:rename+manifest-commit")
+    return processed
 
-    metrics = _metrics_from_manifest(spark, conf, live_parts=set(parts))
-    tm.lap("metrics:manifest-rollup")
-    return RunResult(processed=processed, skipped=skipped, metrics=metrics)
+
+def _readback_stats(spark: SparkSession, staging: str, fmt: str, observed) -> dict:
+    """Job 3 (tiny): per-(sink, part) lineage stats read back from the
+    staged files themselves — column-pruned to (n_tok, row_hash) +
+    partition columns, so it scans megabytes, not the data — and
+    reconciled against the write stage's observation.
+
+    Zero rows staged is detected explicitly (no sink= dirs), NOT by
+    swallowing exceptions — a transient readback failure must fail
+    the run rather than commit row_count=0 manifests over real data."""
+    staged_any = any(
+        e.name.startswith("sink=") for e in os.scandir(staging)
+    ) if os.path.isdir(staging) else False
+    if not staged_any:
+        if int(observed["rows"]) != 0:
+            raise RuntimeError(
+                f"write stage observed {observed['rows']} rows but no "
+                "sink= directories were staged — staging output is "
+                "missing; refusing to commit lineage"
+            )
+        return {}
+    # belt-and-braces with the session-level inference-off config:
+    # sink/part are OUR string keys; a numeric basename read back
+    # as int would miss the stats lookup and commit zero counts.
+    stats = {
+        (str(r["sink"]), str(r["part"])): r
+        for r in spark.read.format(fmt)
+        .load(staging)
+        .groupBy(
+            F.col("sink").cast("string").alias("sink"),
+            F.col("part").cast("string").alias("part"),
+        )
+        .agg(
+            F.count("*").alias("row_count"),
+            # mirror the observe() side's coalesce: an all-NULL
+            # n_tok group must reconcile as 0, not raise TypeError
+            # on int(None) below (ADVICE r03)
+            F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tok_total"),
+            F.coalesce(F.bit_xor("row_hash"), F.lit(0)).alias("checksum"),
+        )
+        .collect()
+    }
+    # write-stage vs file-readback reconciliation (observe() docs
+    # above): totals must match exactly or lineage would lie
+    rb_rows = sum(int(r["row_count"]) for r in stats.values())
+    rb_tok = sum(int(r["tok_total"]) for r in stats.values())
+    rb_x = 0
+    for r in stats.values():
+        rb_x ^= int(r["checksum"])
+    if (rb_rows, rb_tok, rb_x) != (
+        int(observed["rows"]),
+        int(observed["tok_total"]),
+        int(observed["checksum"]),
+    ):
+        raise RuntimeError(
+            "staged readback disagrees with the write-stage "
+            f"observation: readback (rows={rb_rows}, tok={rb_tok}, "
+            f"xor={rb_x}) vs observed (rows={observed['rows']}, "
+            f"tok={observed['tok_total']}, xor={observed['checksum']})"
+            " — staged files are incomplete or corrupted; refusing"
+            " to commit lineage"
+        )
+    return stats
 
 
 def _ship_part(staging: str, rule, p: str) -> None:
     """Ship ONE staged partition dir to the sink path (metadata-only
     rename; cross-device falls back to copy). A partition with zero
-    staged rows clears any stale sink data from a crashed earlier
-    attempt so sink == staged truth."""
+    staged rows clears any stale sink data (a crashed earlier attempt,
+    or an input rewritten in place) so sink == staged truth."""
     src_dir = os.path.join(staging, f"sink={rule.name}", f"part={p}")
     dst_dir = os.path.join(rule.path, f"part={p}")
     if os.path.isdir(src_dir):

@@ -1,16 +1,20 @@
-"""Streaming tail: the Structured Streaming twin of the batch pipeline.
+"""Streaming tail: Spark's file source discovers files; the batch
+pipeline's staged ship processes them.
 
 Semantics parity with the reference's live loop:
 - file-source `readStream` discovery of new files under the input dir
   == inotify Discover/Modify events (log_watcher.go:369-394) — Spark's
   file-stream source tracks seen files in its checkpoint exactly the
-  way llogtail tracks per-file offsets;
-- `foreachBatch` applies the same parse -> enrich -> route stages and
-  writes each sink, then commits manifest rows — push-then-checkpoint
-  ordering preserved per micro-batch (log_collector.go:208-215);
+  way llogtail tracks per-file offsets. Discovery is all the stream
+  does: a micro-batch only names its files (one distinct over
+  input_file_name(), O(batch), never a table listing);
+- processing is `pipeline.ship_and_commit`, the one ship path the
+  batch run also uses: staged write, readback check, rename into the
+  sinks, then the manifest commit — push-then-checkpoint per
+  micro-batch (log_collector.go:208-215);
 - the streaming checkpointLocation + our manifest give resumability:
   a restarted stream reprocesses at most the last uncommitted batch,
-  and idempotent per-partition overwrite keeps sinks exact;
+  and the idempotent per-partition replace keeps sinks exact;
 - Trigger.AvailableNow drains everything currently discoverable and
   stops — the batch-catch-up mode (poller analog, log_watcher.go:167).
 
@@ -33,8 +37,8 @@ forever. Two coverage modes:
   live-loop twin of the reference's rotation branch. Stat-gated
   (O(table) stats per trigger, the poller cadence; footer reads only
   O(changed)), it re-ships exactly the rewritten partitions through
-  the same stages with the same idempotent per-partition overwrite +
-  manifest recommit. For landing dirs fed by rewriting writers.
+  the same `ship_and_commit`. For landing dirs fed by rewriting
+  writers.
 Writers that rotate files INTO the directory (create-then-move) are
 handled by both modes without rescan.
 """
@@ -49,9 +53,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from llogtail_spark import manifest as mf
+from llogtail_spark import pipeline
 from llogtail_spark.config import PipelineConf
-from llogtail_spark.operators.enrich import enrich_stage
-from llogtail_spark.operators.parse import parse_stage
 from llogtail_spark.sources import reader
 
 SEQUENCES_SCHEMA = T.StructType(
@@ -64,141 +67,54 @@ SEQUENCES_SCHEMA = T.StructType(
 )
 
 
-def _resolve_batch_files(
-    spark: SparkSession, input_path: str, parts: list[str], cache: dict
-) -> dict[str, str]:
-    """{part: file} for just this micro-batch's partitions — O(batch),
-    not O(table). Partition ids are file basenames directly under the
-    table dir, so the common case is a pure path construction with no
-    listing at all; a part that doesn't resolve (nested layout, URI
-    scheme) falls back to ONE table listing cached for the stream's
-    lifetime and refreshed only when a part is genuinely unknown."""
-    def _alive(path: str) -> bool:
-        # the vanished-file staleness check only applies to files we
-        # can stat locally; remote paths (hdfs://, s3a://) are trusted
-        # as listed — a wrong guess there would force an O(table)
-        # re-list per batch AND never resolve, the worst of both
-        lp = reader.local_path(path)
-        return True if lp is None else os.path.exists(lp)
-
-    out: dict[str, str] = {}
-    missing: list[str] = []
-    local_root = reader.local_path(input_path)
-    for p in parts:
-        cand = os.path.join(local_root, f"{p}.parquet") if local_root else None
-        if cand is not None and os.path.exists(cand):
-            out[p] = cand
-        else:
-            missing.append(p)
-    if missing:
-        listed = cache.get("parts")
-        # a cached entry whose local file has vanished is STALE, not
-        # resolved — feeding a dead path to the footer reader would
-        # kill the stream instead of hitting the skip-commit branch
-        if listed is None or any(
-            p not in listed or not _alive(listed[p]) for p in missing
-        ):
-            listed = cache["parts"] = reader.list_parts(spark, input_path)
-        for p in missing:
-            f = listed.get(p)
-            if f is not None and _alive(f):
-                out[p] = f
-            # else: unresolved -> caller skips the manifest commit
-    return out
+def _ship_files(spark: SparkSession, conf: PipelineConf, files: dict[str, str],
+                in_ids: dict[str, tuple[int, int]]) -> None:
+    """Replace the input partitions `files` ({part: file}) in every
+    sink through the batch pipeline's one ship path."""
+    pipeline.ship_and_commit(
+        spark, conf, reader.read_files(spark, list(files.values())),
+        {r.name: sorted(files) for r in conf.sinks}, in_ids,
+    )
 
 
-def _run_stages(spark: SparkSession, conf: PipelineConf, df: DataFrame) -> DataFrame:
-    """The shared parse -> enrich -> hash stage chain (batch parity)."""
-    df = reader.with_partition_id(df)
-    df = parse_stage(df, conf.grok)
-    if conf.lookup_path:
-        lookup = spark.read.parquet(conf.lookup_path)
-        df = enrich_stage(df, lookup, defaults=conf.enrich_defaults)
-    # schema parity with the batch pipeline's sinks: the same per-row
-    # content hash ships WITH the data, so batch and streaming runs
-    # against the same sink paths stay single-schema.
-    return df.withColumn("row_hash", F.xxhash64("doc_id", "tok_hash"))
-
-
-def _ship_and_commit(
-    spark: SparkSession,
-    conf: PipelineConf,
-    df: DataFrame,
-    in_ids_for,
-    batch_label,
-) -> dict:
-    """Route `df` (already staged + persisted) to every sink and commit
-    manifest rows. `in_ids_for(parts)` resolves the input identity for
-    exactly the parts present — O(batch) work, never O(table)."""
-    from llogtail_spark.operators.aggregate import pipeline_stats
-
-    # ONE stats job per micro-batch for per-sink lineage counts.
-    stats = {r["part"]: r for r in pipeline_stats(df, conf.sinks).collect()}
-    in_ids = in_ids_for(list(stats)) if stats else {}
-    for rule in conf.sinks:
-        sdf = df.filter(F.expr(rule.predicate))
-        (
-            sdf.write.format(rule.format)
-            .mode("overwrite")
-            .partitionBy("part")
-            .save(rule.path)
-        )
-        for p, s in stats.items():
-            ins = in_ids.get(p)
-            if ins is None:
-                # identity unresolved (file vanished/renamed mid-
-                # batch): committing in_checksum=0 would create an
-                # entry validate_manifest always flags stale. Leave
-                # the part UNCOMMITTED — the sink write above is
-                # idempotent, so the reprocess on restart is exact.
-                print(
-                    f"llogtail_spark: batch {batch_label} part {p!r} has no "
-                    "resolvable input identity; skipping manifest commit",
-                    file=sys.stderr,
-                )
-                continue
-            mf.commit(
-                conf.manifest_dir,
-                mf.ManifestEntry(
-                    sink=rule.name, part=p,
-                    row_count=int(s[f"rc__{rule.name}"]),
-                    tok_total=int(s[f"tt__{rule.name}"]),
-                    checksum=int(s[f"ck__{rule.name}"]),
-                    watermark_offset=int(ins[0]),
-                    committed_at=conf.committed_at,
-                    in_row_count=int(ins[0]),
-                    in_checksum=int(ins[1]),
-                ),
-            )
-    return stats
+def _batch_files(batch_df: DataFrame) -> dict[str, str]:
+    """{part: file} of one micro-batch: the file source already chose
+    the files, one distinct over input_file_name() names them. Local
+    file URIs resolve to plain paths, so the footer reads and the
+    scan open the same file."""
+    files = {}
+    for (uri,) in batch_df.select(F.input_file_name()).distinct().collect():
+        f = reader.local_path(uri) or uri
+        files[reader.part_of(f)] = f
+    return files
 
 
 def _process_batch(spark: SparkSession, conf: PipelineConf, batch_df: DataFrame,
-                   batch_id: int, cache: dict | None = None) -> None:
-    """One micro-batch through parse -> enrich -> route -> ship -> cpt."""
-    df = _run_stages(spark, conf, batch_df).persist()
-    batch_files: dict[str, str] = {}
-    try:
+                   batch_id: int, ledger: dict | None = None) -> None:
+    """One micro-batch: name its files, read their input identities,
+    ship; then, with a rescan ledger, re-ship rewritten files."""
+    files = _batch_files(batch_df)
+    for p, f in list(files.items()):
+        if reader.local_path(f) is not None and not os.path.exists(f):
+            # vanished/renamed since the source listed it: there is no
+            # input identity, and committing in_checksum=0 would create
+            # an entry validate_manifest always flags stale. Leave the
+            # part UNCOMMITTED (and unshipped).
+            print(
+                f"llogtail_spark: batch {batch_id} part {p!r} has no "
+                "resolvable input identity; skipping it",
+                file=sys.stderr,
+            )
+            del files[p]
+    if files:
         # input identity from parquet FOOTER metadata — the SAME
         # definition validate_manifest recomputes (a content-hash
-        # in_checksum here would make every streamed entry look
-        # stale). batch_df.inputFiles() is empty for streaming frames,
-        # so resolve only THIS batch's parts to files (O(batch) work).
-        def _in_ids(parts: list[str]) -> dict:
-            batch_files.update(_resolve_batch_files(
-                spark, conf.input_path, parts,
-                cache if cache is not None else {},
-            ))
-            return reader.files_identity(batch_files) if batch_files else {}
-
-        _ship_and_commit(spark, conf, df, _in_ids, batch_id)
-    finally:
-        df.unpersist()
-    if cache is not None and cache.get("rescan"):
-        ledger = cache.setdefault("ledger", {})
+        # in_checksum here would make every streamed entry look stale)
+        _ship_files(spark, conf, files, reader.files_identity(files))
+    if ledger is not None:
         # seed the ledger with this batch's just-committed files so the
         # rescan's footer reads stay O(changed), not O(committed)
-        for p, f in batch_files.items():
+        for p, f in files.items():
             ledger[p] = _stat_of(f)
         rescan_rewritten(spark, conf, ledger)
 
@@ -233,12 +149,12 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
     (O(changed); a cold ledger — fresh stream or restart — pays one
     metadata-only footer sweep over committed parts, exactly the
     batch validate_manifest cost), and pushes just the rewritten
-    files through the same parse -> enrich -> route -> ship -> commit
-    stages. Per-partition dynamic overwrite + manifest recommit make
-    it idempotent. A file mid-rewrite (unreadable footer) is skipped
-    this round and re-checked next rescan — the writer is still
-    active, the same wait-for-quiesce the watcher applies to a file
-    growing under its tail.
+    files through `pipeline.ship_and_commit`, which replaces each
+    such partition in every sink (clearing it where the new content
+    routes no rows) and recommits its manifest. A file mid-rewrite
+    (unreadable footer) is skipped this round and re-checked next
+    rescan — the writer is still active, the same wait-for-quiesce
+    the watcher applies to a file growing under its tail.
 
     Returns the sorted list of re-shipped partition ids."""
     entries = mf.read_all(conf.manifest_dir)
@@ -282,17 +198,7 @@ def rescan_rewritten(spark: SparkSession, conf: PipelineConf,
             changed[part] = path
             ids[part] = (rc, ck)
     if changed:
-        df = _run_stages(
-            spark, conf, reader.read_files(spark, list(changed.values()))
-        ).persist()
-        try:
-            _ship_and_commit(
-                spark, conf, df,
-                lambda parts: {p: ids[p] for p in parts if p in ids},
-                "rescan",
-            )
-        finally:
-            df.unpersist()
+        _ship_files(spark, conf, changed, ids)
     return sorted(changed)
 
 
@@ -319,12 +225,12 @@ def stream_pipeline(
         .options(**opts)
         .parquet(conf.input_path)
     )
-    # per-stream part->file listing cache (fallback only) + the
-    # rescan flag/ledger when in-place rotation handling is on
-    cache: dict = {"rescan": True} if rescan else {}
+    # per-stream (part -> stat) ledger when in-place rotation
+    # handling is on
+    ledger: dict | None = {} if rescan else None
     writer = (
         stream.writeStream.foreachBatch(
-            lambda bdf, bid: _process_batch(spark, conf, bdf, bid, cache)
+            lambda bdf, bid: _process_batch(spark, conf, bdf, bid, ledger)
         )
         .option("checkpointLocation", os.path.join(conf.workdir, "stream_cpt"))
     )

@@ -30,6 +30,32 @@ def test_commit_overwrites_atomically(tmp_path):
     assert all(f.endswith(".json") for f in os.listdir(d))
 
 
+def test_failed_stage_commit_leaves_no_temp_file(tmp_path):
+    """The corpus stage-manifest commit shares the manifest's atomic
+    writer: a commit that fails mid-write leaves no temp file behind
+    and keeps the previous committed stage manifest."""
+    import os
+
+    import pytest
+
+    from llogtail_spark.corpus_pipeline import (
+        StageManifest, commit_stage, read_stage,
+    )
+
+    d = str(tmp_path / "sm")
+    good = StageManifest(stage="quality", in_rows=1, in_checksum=2,
+                         out_rows=1, tok_total=3, out_checksum=4,
+                         params_crc=5)
+    path = commit_stage(d, good)
+    bad = StageManifest(stage="quality", in_rows=1, in_checksum=2,
+                        out_rows=1, tok_total=3, out_checksum=4,
+                        params_crc=5, committed_at=object())
+    with pytest.raises(TypeError):
+        commit_stage(d, bad)  # object() is not JSON-serialisable
+    assert os.listdir(d) == [os.path.basename(path)]
+    assert read_stage(d, "quality") == good
+
+
 def test_committed_parts_per_sink(tmp_path):
     d = str(tmp_path / "m")
     mf.commit(d, _entry(sink="a", part="p-0"))

@@ -1,4 +1,4 @@
-"""Routing rule truth table + fan-out semantics."""
+"""Routing rule truth table + routed-view semantics."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,7 +7,6 @@ from llogtail_spark.operators.route import (
     SinkRule,
     assign_sinks,
     explode_routed,
-    fan_out,
     load_rules,
 )
 
@@ -45,13 +44,6 @@ def test_explode_routed_row_count(parsed):
     routed = explode_routed(parsed, RULES)
     assert routed.count() == 5 + 2 + 1  # firehose(5) + errors(2) + warnings(1)
     assert routed.filter(F.col("sink") == "errors").count() == 2
-
-
-def test_fan_out_matches_assign(parsed):
-    views = fan_out(parsed, RULES)
-    assert views["errors"].count() == 2
-    assert views["warnings"].count() == 1
-    assert views["firehose"].count() == 5
 
 
 def test_load_rules_roundtrip(tmp_path):

@@ -461,6 +461,106 @@ def test_stream_rescan_reships_rewritten_during_stream(spark, tmp_path):
     assert len(mf.committed_parts(conf.manifest_dir, "firehose")) == 4
 
 
+def test_rescan_clears_sink_partition_left_without_rows(spark, tmp_path):
+    """A file rewritten in place whose new content routes NO rows to a
+    sink: the rescan must clear that sink's partition, so the sink
+    agrees with the recommitted manifest's row_count=0 (a filtered
+    per-sink overwrite would leave the old rows behind)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from llogtail_spark.streaming.tail import rescan_rewritten
+
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=43, n_files=3)
+    wd = str(tmp_path / "w")
+    conf = PipelineConf(
+        input_path=os.path.join(data, "sequences"),
+        lookup_path=os.path.join(data, "lookup_sources.parquet"),
+        workdir=wd,
+        sinks=[
+            SinkRule("app", "source = 'app.log'", os.path.join(wd, "out/app")),
+            SinkRule("firehose", "true", os.path.join(wd, "out/firehose")),
+        ],
+    )
+    q = stream_pipeline(spark, conf)
+    q.awaitTermination(120)
+    app = spark.read.parquet(conf.sinks[0].path)
+    assert app.filter(F.col("part") == "part-00001").count() > 0
+
+    new = generate_sequences(150, seed=88)
+    new = new.filter(pc.not_equal(new["source"], "app.log"))
+    pq.write_table(new, os.path.join(data, "sequences", "part-00001.parquet"))
+    assert rescan_rewritten(spark, conf, {}) == ["part-00001"]
+
+    entries = {(e.sink, e.part): e for e in mf.read_all(conf.manifest_dir)}
+    assert entries[("app", "part-00001")].row_count == 0
+    assert entries[("firehose", "part-00001")].row_count == new.num_rows
+    app = spark.read.parquet(conf.sinks[0].path)
+    assert app.filter(F.col("part") == "part-00001").count() == 0
+    # the untouched partitions keep exactly their committed rows
+    for p in ("part-00000", "part-00002"):
+        assert (app.filter(F.col("part") == p).count()
+                == entries[("app", p)].row_count)
+
+
+def test_stream_then_batch_metrics_equal_batch_only(spark, tmp_path):
+    """Streamed and batch-shipped partitions are one lineage: stream 2
+    files, add a third, and a batch run processes only the third;
+    its metrics equal a batch-only run over all 3 files."""
+    from llogtail_spark.pipeline import run_pipeline
+
+    data = str(tmp_path / "data")
+    write_fixture(data, 300, seed=51, n_files=3)
+    third = os.path.join(data, "sequences", "part-00002.parquet")
+    held = str(tmp_path / "held.parquet")
+    shutil.move(third, held)
+    conf = _conf(data, tmp_path / "w")
+    q = stream_pipeline(spark, conf)
+    q.awaitTermination(120)
+    assert mf.committed_parts(conf.manifest_dir, "firehose") == {
+        "part-00000", "part-00001"}
+
+    shutil.move(held, third)
+    res = run_pipeline(spark, conf)
+    assert res.processed == {"errors": ["part-00002"],
+                             "firehose": ["part-00002"]}
+
+    batch = run_pipeline(spark, _conf(data, tmp_path / "fresh"))
+    assert all(len(v) == 3 for v in batch.processed.values())
+    assert (sorted(map(tuple, res.metrics.collect()))
+            == sorted(map(tuple, batch.metrics.collect())))
+
+
+def test_vanished_batch_file_is_left_uncommitted(spark, tmp_path, monkeypatch):
+    """A micro-batch file that vanishes after the source listed it but
+    before its identity read is neither shipped nor committed (an
+    in_checksum=0 entry would always look stale); the rest of the
+    batch ships and validates clean."""
+    from llogtail_spark.pipeline import validate_manifest
+    from llogtail_spark.streaming import tail
+
+    data = str(tmp_path / "data")
+    write_fixture(data, 200, seed=61, n_files=2)
+    conf = _conf(data, tmp_path / "w")
+    gone = os.path.join(data, "sequences", "part-00001.parquet")
+    real_batch_files = tail._batch_files
+
+    def listed_then_vanished(batch_df):
+        files = real_batch_files(batch_df)
+        assert sorted(files) == ["part-00000", "part-00001"]
+        os.unlink(gone)
+        return files
+
+    monkeypatch.setattr(tail, "_batch_files", listed_then_vanished)
+    tail._process_batch(spark, conf, spark.read.parquet(conf.input_path), 0)
+    assert mf.committed_parts(conf.manifest_dir, "firehose") == {"part-00000"}
+    fire = spark.read.parquet(conf.sinks[1].path)
+    assert {r["part"] for r in fire.select("part").distinct().collect()} == {
+        "part-00000"}
+    assert validate_manifest(spark, conf) == []
+
+
 def _docs_table(rows):
     import pyarrow as pa
 
